@@ -13,31 +13,86 @@ CLI (reference src/main.rs:77-87, dispatch :353-358).
 Mapping to the reference:
 - ``pre-process`` ≙ main.rs:170-258 — walk a contract tree (fiesta
   folder layout, or Etherscan JSON dumps with ``--etherscan``), parse,
-  content-address, dedup, bulk-load into DuckDB. ``--chunk-size``
-  becomes a repartition hint (Spark streams partitions; the reference
-  chunked to bound RAM). ``--ignore-errors`` keeps the lenient parse
-  fallbacks; strict mode fails the job on malformed input.
+  content-address, dedup, bulk-load into DuckDB. ``--chunk-size N``
+  means about N contracts per scan split (the reference chunked to
+  bound RAM; Spark streams each split). ``--ignore-errors`` keeps the
+  lenient parse fallbacks; strict mode fails the job on malformed
+  input.
 - ``index-functions`` ≙ main.rs:261-331 — read stored contracts back,
   run the extraction stage (solc when available, the built-in scanner
-  otherwise), store function rows.
+  otherwise), store function rows. ``--chunk-size N`` means at most N
+  contracts per Arrow batch into the extraction stage.
 - ``export-source`` ≙ main.rs:353-358 + plain_contract.rs:528-535 —
   point lookup + sanitized file writes.
 - ``download-solc`` ≙ utils.rs:29-48 — solc bootstrap, gated on
   py-solc-x.
+
+Task counts follow the session's parallelism, not the chunk size: the
+file listing runs at most one task per core, and a chunk bounds the
+bytes or rows one task or batch holds. Every Spark conf a command sets
+is put back when the command returns, so it never reaches later work
+in a shared session.
 """
 
 from __future__ import annotations
 
 import argparse
+import contextlib
 import sys
 
 from pyspark.sql import SparkSession
+
+#: Scan budget per contract for ``pre-process --chunk-size``: ~16 KiB
+#: approximates a verified-contract bundle, which is about two files
+#: (metadata.json plus one source) at the per-file open cost below.
+_CONTRACT_SPLIT_BYTES = 16 * 1024
+#: Spark charges every file this many bytes when it packs files into
+#: scan splits. Its 4 MiB default outweighs a whole chunk's budget, so
+#: every file got a split (a task) of its own.
+_FILE_OPEN_COST_BYTES = 8 * 1024
 
 
 def _spark() -> SparkSession:
     from .session import get_spark
 
     return get_spark(app_name="scdb-cli")
+
+
+@contextlib.contextmanager
+def _scoped_conf(spark: SparkSession, settings: dict):
+    """Set session confs for one command's Spark work, then restore the
+    values they had before, or unset the ones that were unset."""
+    prior = {k: spark.conf.get(k, None) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def _scan_conf(spark: SparkSession, chunk_size: int) -> dict:
+    """Scan-shape confs for ``pre-process``: a file listing of at most
+    one task per core (Spark's default cap is 10,000 tasks, one per
+    directory below it), and splits packing about ``chunk_size``
+    contracts. Spark also caps a split at the tree's bytes per core, so
+    a small tree scans in about one task per core."""
+    conf = {
+        "spark.sql.sources.parallelPartitionDiscovery.parallelism":
+            spark.sparkContext.defaultParallelism,
+        "spark.sql.files.openCostInBytes": _FILE_OPEN_COST_BYTES,
+    }
+    if chunk_size:
+        # The reference's --chunk-size bounds rows held in RAM per chunk
+        # (main.rs:170-258). Spark's analogue is the scan split budget.
+        conf["spark.sql.files.maxPartitionBytes"] = (
+            chunk_size * _CONTRACT_SPLIT_BYTES
+        )
+    return conf
 
 
 def _first_corrupt_json(df, content_col: str, key_col: str):
@@ -55,23 +110,17 @@ def _first_corrupt_json(df, content_col: str, key_col: str):
 
 
 def cmd_pre_process(args: argparse.Namespace) -> int:
+    spark = _spark()
+    with _scoped_conf(spark, _scan_conf(spark, args.chunk_size)):
+        return _pre_process(spark, args)
+
+
+def _pre_process(spark: SparkSession, args: argparse.Namespace) -> int:
     from pyspark.sql import functions as F
 
     from .sinks import duckdb_sink as sink
     from .sources import contracts as C
 
-    spark = _spark()
-    if args.chunk_size:
-        # The reference's --chunk-size bounds rows held in RAM per chunk
-        # (main.rs:170-258). Spark's analogue is the scan split budget:
-        # bound bytes per task up front instead of paying a full extra
-        # pass over the corpus (df.count()) just to derive a partition
-        # number. ~16 KiB approximates a verified-contract bundle; the
-        # 1 MiB floor keeps splits sane for tiny chunk sizes.
-        spark.conf.set(
-            "spark.sql.files.maxPartitionBytes",
-            str(max(args.chunk_size * 16 * 1024, 1 << 20)),
-        )
     if args.etherscan:
         raw = C.read_etherscan_files(spark, args.contracts_root)
         if not args.ignore_errors:
@@ -133,7 +182,7 @@ def _etherscan_storage_shape(raw, parsed):
     from pyspark.sql import functions as F
 
     from .schemas import ETHERSCAN_RAW_SCHEMA
-    from .sources.contracts import unwrap_double_brace
+    from .sources.contracts import first_per_id, unwrap_double_brace
 
     fields = F.from_json("content", ETHERSCAN_RAW_SCHEMA)
     src = unwrap_double_brace(fields["SourceCode"])
@@ -175,13 +224,15 @@ def _etherscan_storage_shape(raw, parsed):
             )
         )
     )
-    return joined.select(
-        "id",
-        F.col("contract_name").alias("name"),
-        "metadata",
-        tagged.alias("source"),
-        "source_type",
-    ).dropDuplicates(["id"])
+    return first_per_id(
+        joined.select(
+            "id",
+            F.col("contract_name").alias("name"),
+            "metadata",
+            tagged.alias("source"),
+            "source_type",
+        )
+    )
 
 
 def cmd_index_functions(args: argparse.Namespace) -> int:
@@ -228,21 +279,18 @@ def cmd_index_functions(args: argparse.Namespace) -> int:
             ),
         ).alias("files"),
     )
-    if args.chunk_size:
-        # partition count from the sink's own (local, instant) row count
-        # — never a Spark job over the parse pipeline
-        import duckdb
-
-        con = duckdb.connect(args.db_file, read_only=True)
-        try:
-            n_rows = con.execute("SELECT COUNT(*) FROM contract").fetchone()[0]
-        finally:
-            con.close()
-        processing = processing.repartition(
-            max(1, -(-n_rows // args.chunk_size))
-        )
     fns = stage.extract_functions(processing)
-    n = sink.store_functions(fns, args.db_file)
+    # --chunk-size bounds the contracts per Arrow batch, the RAM bound
+    # the reference's compile chunk gave (main.rs:273-331); the stage
+    # keeps the input's partitions, one per core. Set only around the
+    # store: read_contracts slices its own Arrow transfer by this conf.
+    batch = (
+        {"spark.sql.execution.arrow.maxRecordsPerBatch": args.chunk_size}
+        if args.chunk_size
+        else {}
+    )
+    with _scoped_conf(spark, batch):
+        n = sink.store_functions(fns, args.db_file)
     print(f"stored {n} new functions into {args.db_file}")
     return 0
 
@@ -456,13 +504,20 @@ def build_parser() -> argparse.ArgumentParser:
     pp.add_argument("--contracts-root", required=True)
     pp.add_argument("--db-file", required=True)
     pp.add_argument("--etherscan", action="store_true")
-    pp.add_argument("--chunk-size", type=int, default=0)
+    pp.add_argument(
+        "--chunk-size", type=int, default=0,
+        help="about N contracts per scan split (0: Spark's split size)",
+    )
     pp.add_argument("--ignore-errors", action="store_true")
     pp.set_defaults(fn=cmd_pre_process)
 
     ix = sub.add_parser("index-functions", help="extract function rows")
     ix.add_argument("--db-file", required=True)
-    ix.add_argument("--chunk-size", type=int, default=0)
+    ix.add_argument(
+        "--chunk-size", type=int, default=0,
+        help="at most N contracts per Arrow batch into the extraction "
+             "stage (0: Spark's batch size)",
+    )
     ix.set_defaults(fn=cmd_index_functions)
 
     ex = sub.add_parser("export-source", help="write a contract's files to disk")

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schemas import FUNCTION_SCHEMA
-from ..sources.contracts import PY_WS_PATTERN
+from ..sources.contracts import PY_WS_PATTERN, first_per_id
 from .solidity import scan_file_contracts
 
 #: Rust-``\s``-compatible (Unicode White_Space) class — the same one the
@@ -159,13 +159,5 @@ def extract_functions(contracts: DataFrame) -> DataFrame:
     extracted = packed.mapInPandas(_extract_batches, schema=FUNCTION_SCHEMA)
     # conflict-ignore dedup (db.rs:208): e.g. a whitespace-variant
     # duplicate dir yields the same function id with a DIFFERENT body
-    # slice. The reference keeps whichever insert arrives first;
-    # ``dropDuplicates`` would mirror that nondeterminism across
-    # partitionings, so pick the lexicographic minimum row instead —
-    # deterministic under any partitioning/arrival order.
-    cols = [f.name for f in FUNCTION_SCHEMA.fields]
-    return (
-        extracted.groupBy("id")
-        .agg(F.min(F.struct(*[c for c in cols if c != "id"])).alias("r"))
-        .select("id", *[F.col(f"r.{c}") for c in cols if c != "id"])
-    )
+    # slice; keep the lexicographic minimum row
+    return first_per_id(extracted)

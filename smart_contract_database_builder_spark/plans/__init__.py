@@ -24,118 +24,83 @@ from . import llm_ops  # noqa: E402,F401
 from . import scale_ops  # noqa: E402,F401
 from . import streaming_batch  # noqa: E402,F401
 
-#: Queries the driver window must cover first. ROUND-17 ROTATION —
-#: this window executes the r16 ledger EXACTLY (VERDICT r16 "Next
-#: round #1-#3"): (a) four changed-plan/oracle witnesses — the three
-#: rank statistics whose overflow paths were hardened this round
-#: (A66 r1x2 → decimal(38,0), A67 cross-multiply → decimal(38,0),
-#: A72 oracle eta_sq grand term → VARCHAR hop) and the substring
-#: dedup TRANSFORM whose anchor stream now derives from the shared
-#: tokenized relation (single documents scan), (b) the four standing
-#: family witnesses, (c) 19 of the 40-query r10-evidence cohort (the
-#: freshness floor binds at r18; session 2 displaced 7 of the
-#: original 26, so 21 are guard-forced next round), (d) three
-#: never-windowed rows-only
-#: queries (VERDICT r16 #3: the streaming-state and sketch families'
-#: turn), (e) the 13 round-17-born operators (11 oracled + the
-#: rows-only power-iteration PC and the true-streaming near-dup
-#: admission witness, VERDICT r16 #2), and (f) the 7 r17-SESSION-2
-#: newborns (KM survival, BH-FDR, mutual information, isotonic
-#: calibration, CDC chunk dedup, retrieval eval, log-rank test),
-#: which take the slots of 7 r10-cohort queries displaced to the r18
-#: forced set. 4+4+19+3+13+7 = EXACTLY 50.
-#: Everything rotated out (the r16 window's other 39 queries) is
-#: driver-green in CORRECTNESS_r16 with plan code unchanged since,
-#: and stays under the pytest oracle sweep
-#: (tests/test_oracle_parity.py).
+#: Queries the driver window must cover first. ROUND-19 ROTATION —
+#: this window executes the r18 ledger: (a) the eight standing family
+#: witnesses stay at the head (the three hardened rank statistics and
+#: the single-scan trim transform, then core relational, reference
+#: family, true streaming and exact dedup), (b) the 21 r10-evidence
+#: queries the freshness guard forces at r19 (newest driver row r10,
+#: floor r11), (c) the first 21 of the 43-query r11-evidence cohort
+#: (floor r12, so the whole cohort would be forced at r20 — pre-split
+#: in half, as the r18 ledger asked). 8+21+21 = EXACTLY 50. The r17
+#: window's other 42 queries rotated out: 37 oracled ones, each
+#: driver-green in CORRECTNESS_r17/r18 with plans unchanged since, head
+#: _OVERFLOW, and the five rows-only evidence debuts (rows recorded in
+#: CORRECTNESS_r17 and r18) returned to _TAIL.
 #:
-#: ROUND-18 ROTATION LEDGER: the guard forces the REMAINING 21 r10-
-#: evidence queries (the 7 session-2-displaced queries at the head of
-#: _OVERFLOW + the 14-query tail of the _OVERFLOW r10 block below) at
-#: r18 — window them first, then r18 newborns/witnesses; after that
-#: the oldest evidence is the r11 cohort (43 queries, floor r19),
-#: so r19 should again pre-split it roughly in half.
+#: ROUND-20 ROTATION LEDGER: the guard forces the REMAINING 22 r11-
+#: evidence queries (the tail of _OVERFLOW's r12-rotation block) at
+#: r20 — window them first; after that the oldest evidence is the r12
+#: cohort (45 queries, floor r21), so r20 should pre-split it roughly
+#: in half.
 _PRIORITY = [
-    # --- changed-plan/oracle witnesses (r17 overflow hardening +
-    # the single-scan trim transform) ---
+    # --- standing family witnesses: the r17 changed-plan witnesses
+    # (overflow hardening + the single-scan trim transform), core
+    # relational, reference family, true streaming, exact dedup ---
     "agg_mann_whitney_u",
     "agg_ks_two_sample",
     "agg_weekday_anova",
     "llm_substring_dedup_trim",
-    # --- standing family witnesses: core relational, reference
-    # family, true streaming, exact dedup ---
     "flagship_revenue_by_region",
     "ref_extract_functions",
     "stream_true_tumbling_availablenow",
     "llm_exact_dedup_documents",
-    # --- freshness rotation: 19 of the 40-query r10-evidence cohort
-    # (newest driver row r10; floor at r18; session 2 displaced 7 of
-    # the original 26 to the r18 forced set) ---
-    "llm_ann_hyperplane_buckets",
-    "llm_ann_bucketed_cosine_pairs",
-    "llm_ann_recall_report",
-    "llm_simhash_documents",
-    "agg_skewed_revenue_salted",
-    "join_hot_key_split_revenue",
-    "agg_returned_items_report",
-    "agg_cross_nation_volume",
-    "agg_market_share_by_year",
-    "agg_promo_revenue_share",
-    "filter_disjunctive_parts_revenue",
-    "window_top_supplier_quarterly",
-    "agg_large_volume_customers",
-    "agg_shipping_priority_topk",
-    "join_late_shipment_priority",
-    "agg_event_markov_transitions",
-    "agg_rfm_segments",
-    "window_session_stats_batch",
-    "llm_bigram_surprisal_docs",
-    # --- rows-only evidence debut (VERDICT r16 #3): never-windowed
-    # streaming-state/sketch queries; the driver records a rows-only
-    # check (their correctness lives in pytest) ---
-    "stream_stateful_running_totals",
-    "agg_percentile_prices_approx",
-    "llm_ml_minhash_join",
-    # --- the 13 round-17-born operators: first driver rows (11
-    # oracled + 2 rows-only: the power-iteration PC and the
-    # true-streaming near-dup admission witness) ---
-    "agg_kendall_tau_daily",
-    "agg_theilsen_trend_slope",
-    "agg_changepoint_best_split",
-    "agg_quantile_treatment_effect",
-    "agg_runs_test_daily",
-    "agg_autocorr_daily_revenue",
-    "agg_seasonal_decomposition_daily",
-    "join_er_duplicate_listings",
-    "llm_hash_collision_audit",
-    "layout_bloom_sizing_audit",
-    "llm_source_loo_quality_shift",
-    "llm_embedding_top_pc_power",
-    "stream_true_neardup_admission",
-    # --- SESSION-2 AMENDMENT: the 3 r17-session-2-born statistics
-    # operators (KM survival, BH-FDR, mutual information) take window
-    # slots from birth; the 3 r10-cohort queries they displace
-    # (window_rolling_7day_revenue, stream_hourly_ohlc,
-    # agg_idle_rich_customers) move to the r18 forced set below —
-    # still within the 8-round freshness guard (r10 evidence, floor
-    # r18), so nothing goes stale; r18's guard-forced count rises
-    # from 14 to 17 ---
-    "agg_kaplan_meier_reorder",
-    "agg_return_rate_fdr_bh",
-    "agg_event_weekday_mutual_info",
-    # --- SESSION-2 AMENDMENT part 2: the 3 session-2 llm operators
-    # (isotonic calibration, CDC chunk dedup, retrieval eval) take
-    # the slots of llm_bpe_train_merges / llm_bpe_segment_vocab /
-    # llm_langid_confusion_matrix (also r10 evidence, floor r18);
-    # r18's guard-forced count is now 20 of the original 40-query
-    # r10 cohort ---
-    "llm_isotonic_quality_calibration",
-    "llm_cdc_chunk_dedup",
-    "llm_retrieval_eval_report",
-    # --- SESSION-2 AMENDMENT part 3: the log-rank test (A84, the
-    # survival family's two-sample comparison) takes the slot of
-    # llm_zipf_slope_report (r10 evidence, floor r18) ---
-    "agg_logrank_reorder_by_segment",
+    # --- guard-forced at r19: the 21 r10-evidence queries the r18
+    # ledger scheduled (newest driver row r10) ---
+    "window_rolling_7day_revenue",
+    "stream_hourly_ohlc",
+    "agg_idle_rich_customers",
+    "llm_bpe_train_merges",
+    "llm_bpe_segment_vocab",
+    "llm_langid_confusion_matrix",
+    "llm_zipf_slope_report",
+    "join_excess_quantity_suppliers",
+    "llm_bpe_encode_stats",
+    "agg_event_type_lift",
+    "llm_ivfpq_topk",
+    "window_ewma_daily_revenue",
+    "llm_curation_pipeline_v2",
+    "window_seasonal_naive_mape",
+    "agg_weekday_seasonality",
+    "llm_curriculum_order",
+    "llm_simhash_hamming_pairs",
+    "agg_rolling_wau",
+    "llm_winnow_collisions",
+    "llm_kmeans_purity",
+    "agg_nation_revenue_yoy",
+    # --- r20 pre-split: the first 21 of the 43-query r11-evidence
+    # cohort (newest driver row r11) ---
+    "agg_forecast_revenue_change",
+    "agg_local_supplier_volume",
+    "join_min_cost_supplier",
+    "join_lone_late_supplier",
+    "llm_kcore_candidates",
+    "llm_mattr_lexical_diversity",
+    "llm_reservoir_sample_by_lang",
+    "llm_weighted_sample_docs",
+    "llm_source_kl_divergence",
+    "llm_train_split_leakage_aware",
+    "llm_embedding_covariance",
+    "llm_minhash_lsh_pairs_stored",
+    "llm_ivfpq_encoded_topk",
+    "join_bucketed_priority_revenue",
+    "llm_minhash_lsh_pairs",
+    "llm_neardup_clusters",
+    "llm_embedding_neardup_clusters",
+    "llm_pagerank_candidates",
+    "llm_minhash_estimate_calibration",
+    "llm_incremental_neardup",
+    "llm_sentence_dedup_fraction",
 ]
 
 #: Operators registered straight into _OVERFLOW in the round that
@@ -156,17 +121,46 @@ _BORN_IN_OVERFLOW: set[str] = set()
 #: this list consciously — whatever sits here trades driver-visible
 #: correctness evidence for a slot.
 _OVERFLOW = [
-    # r17 SESSION-2 displacement: 7 r10-evidence queries give their
-    # window slots to the session-2 newborns above; they join the 14
-    # already-ledgered r10-cohort queries in the r18 forced set
-    # (newest driver row r10; freshness floor binds at r18)
-    "window_rolling_7day_revenue",
-    "stream_hourly_ohlc",
-    "agg_idle_rich_customers",
-    "llm_bpe_train_merges",
-    "llm_bpe_segment_vocab",
-    "llm_langid_confusion_matrix",
-    "llm_zipf_slope_report",
+    # r19 rotation: the r17 window minus its standing witnesses and
+    # rows-only debuts — every one driver-green in CORRECTNESS_r17
+    # and r18 with plans unchanged since
+    "llm_ann_hyperplane_buckets",
+    "llm_ann_bucketed_cosine_pairs",
+    "llm_ann_recall_report",
+    "llm_simhash_documents",
+    "agg_skewed_revenue_salted",
+    "join_hot_key_split_revenue",
+    "agg_returned_items_report",
+    "agg_cross_nation_volume",
+    "agg_market_share_by_year",
+    "agg_promo_revenue_share",
+    "filter_disjunctive_parts_revenue",
+    "window_top_supplier_quarterly",
+    "agg_large_volume_customers",
+    "agg_shipping_priority_topk",
+    "join_late_shipment_priority",
+    "agg_event_markov_transitions",
+    "agg_rfm_segments",
+    "window_session_stats_batch",
+    "llm_bigram_surprisal_docs",
+    "agg_kendall_tau_daily",
+    "agg_theilsen_trend_slope",
+    "agg_changepoint_best_split",
+    "agg_quantile_treatment_effect",
+    "agg_runs_test_daily",
+    "agg_autocorr_daily_revenue",
+    "agg_seasonal_decomposition_daily",
+    "join_er_duplicate_listings",
+    "llm_hash_collision_audit",
+    "layout_bloom_sizing_audit",
+    "llm_source_loo_quality_shift",
+    "agg_kaplan_meier_reorder",
+    "agg_return_rate_fdr_bh",
+    "agg_event_weekday_mutual_info",
+    "llm_isotonic_quality_calibration",
+    "llm_cdc_chunk_dedup",
+    "llm_retrieval_eval_report",
+    "agg_logrank_reorder_by_segment",
     # r17 rotation: the r16 window's changed-plan witness, the
     # 10-query r8 remainder, the 14 r15-session-2 newborns, and the
     # 14 other r16-born operators — every one driver-green in
@@ -404,28 +398,8 @@ _OVERFLOW = [
     # r12 rotation: the whole round-11 window (12 r9-born + 8 store
     # witnesses + the r11-born operator batches) earned green r11
     # rows with plans unchanged since — rotated out to refresh the
-    # r4/r5-evidence cohort
-    "agg_forecast_revenue_change",
-    "agg_local_supplier_volume",
-    "join_min_cost_supplier",
-    "join_lone_late_supplier",
-    "llm_kcore_candidates",
-    "llm_mattr_lexical_diversity",
-    "llm_reservoir_sample_by_lang",
-    "llm_weighted_sample_docs",
-    "llm_source_kl_divergence",
-    "llm_train_split_leakage_aware",
-    "llm_embedding_covariance",
-    "llm_minhash_lsh_pairs_stored",
-    "llm_ivfpq_encoded_topk",
-    "join_bucketed_priority_revenue",
-    "llm_minhash_lsh_pairs",
-    "llm_neardup_clusters",
-    "llm_embedding_neardup_clusters",
-    "llm_pagerank_candidates",
-    "llm_minhash_estimate_calibration",
-    "llm_incremental_neardup",
-    "llm_sentence_dedup_fraction",
+    # r4/r5-evidence cohort. Its first 21 hold r19 window slots; the
+    # 22 below are guard-forced at r20 (window them first next round)
     "llm_repetition_ngram_profile",
     "llm_dsir_importance",
     "llm_cluster_size_histogram",
@@ -448,32 +422,6 @@ _OVERFLOW = [
     "llm_topic_keyword_assignment",
     "llm_source_lang_entropy",
     "llm_setsim_join_exact",
-    # band-store family members whose r11 plan change is witnessed by
-    # the sibling dedup graph/verify queries (same candidate
-    # generator); all stay under the pytest oracle sweep
-    # cluster-store read path witnessed by the neardup-clusters and
-    # leakage-split consumers
-    # Every query here is driver-green in some CORRECTNESS_r*.json
-    # artifact (pinned by tests/test_registry_window.py) and stays
-    # under the pytest oracle sweep (tests/test_oracle_parity.py,
-    # exact-match at sf0.01). After the round-11 rotation the
-    # never-driver-sampled backlog is EMPTY. The r17 rotation windows
-    # 26 of this block's 40 r10-evidence queries; the 14 below are
-    # guard-forced at r18 (window them first next round).
-    "join_excess_quantity_suppliers",
-    "llm_bpe_encode_stats",
-    "agg_event_type_lift",
-    "llm_ivfpq_topk",
-    "window_ewma_daily_revenue",
-    "llm_curation_pipeline_v2",
-    "window_seasonal_naive_mape",
-    "agg_weekday_seasonality",
-    "llm_curriculum_order",
-    "llm_simhash_hamming_pairs",
-    "agg_rolling_wau",
-    "llm_winnow_collisions",
-    "llm_kmeans_purity",
-    "agg_nation_revenue_yoy",
 ]
 
 #: Genuinely rows-only queries (no cross-engine oracle can exist:
@@ -496,6 +444,13 @@ _TAIL = [
     "stream_true_point_in_time",
     "stream_true_scd2_closed",
     "agg_sketch_rollup_users",
+    # the r17/r18 rows-only evidence debuts (rows recorded in
+    # CORRECTNESS_r17 and r18), rotated back at r19
+    "stream_stateful_running_totals",
+    "agg_percentile_prices_approx",
+    "llm_ml_minhash_join",
+    "llm_embedding_top_pc_power",
+    "stream_true_neardup_admission",
 ]
 
 # A typo'd name here would silently no-op the reorder; fail at import

@@ -27,6 +27,8 @@ import duckdb
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.contracts import first_per_id
+
 #: Reference DDL (src/db.rs:59-88), IF NOT EXISTS like the reference's
 #: ignored-error bootstrap.
 DDL = """
@@ -86,13 +88,15 @@ def contracts_storage_shape(parsed: DataFrame) -> DataFrame:
         .when(F.col("source_type") == "json", js)
         .otherwise(single)
     )
-    return parsed.select(
-        "id",
-        F.col("contract_name").alias("name"),
-        "metadata",
-        source.alias("source"),
-        "source_type",
-    ).dropDuplicates(["id"])
+    return first_per_id(
+        parsed.select(
+            "id",
+            F.col("contract_name").alias("name"),
+            "metadata",
+            source.alias("source"),
+            "source_type",
+        )
+    )
 
 
 def _staged_load(

@@ -88,6 +88,22 @@ def function_id(contract_id_col: Column, filename: Column, selector: Column) -> 
     return F.md5(normalized(F.concat(contract_id_col, filename, selector)))
 
 
+def first_per_id(df: DataFrame) -> DataFrame:
+    """One row per ``id``: the lexicographically smallest of the rows
+    that share it. The reference keeps whichever conflicting insert
+    arrives first (db.rs:174,208), e.g. of a whitespace-variant
+    duplicate dir; ``dropDuplicates`` would carry that arrival order
+    over from the scan splits and partitioning, so the stored row would
+    change with ``--chunk-size``. The smallest row is the same under any
+    partitioning."""
+    rest = [c for c in df.columns if c != "id"]
+    return (
+        df.groupBy("id")
+        .agg(F.min(F.struct(*rest)).alias("r"))
+        .select("id", *[F.col(f"r.{c}") for c in rest])
+    )
+
+
 def unwrap_double_brace(c: Column) -> Column:
     """F10: Etherscan's ``{{…}}`` wrapper → ``{…}`` by slicing chars
     1..len-1 (plain_contract.rs:258-263)."""

@@ -23,21 +23,14 @@ from smart_contract_database_builder_spark.plans import _OVERFLOW, _TAIL
 _DRIVER_WINDOW = 50
 
 
-#: Rows-only queries deliberately holding round-17 window slots
-#: (VERDICT r16 "Next round #2/#3"): the streaming-state and sketch
-#: families' never-windowed queries taking their evidence turn, plus
-#: the two r17-born rows-only operators (the power-iteration PC and
-#: the true-streaming near-dup admission witness) earning their first
-#: driver rows. Each spends one round in the window to earn a modern
-#: rows-only driver row, then rotates back to _TAIL. Grow this set
-#: consciously — every entry displaces an oracle-checked slot.
-_ROWS_ONLY_WINDOWED = {
-    "stream_stateful_running_totals",
-    "agg_percentile_prices_approx",
-    "llm_ml_minhash_join",
-    "llm_embedding_top_pc_power",
-    "stream_true_neardup_admission",
-}
+#: Rows-only queries deliberately holding window slots to earn a
+#: modern rows-only driver row. Each spends a round in the window, then
+#: rotates back to _TAIL. EMPTY after the r19 rotation: the five
+#: streaming-state/sketch and r17-born rows-only queries that held r17
+#: slots (rows recorded in CORRECTNESS_r17 and r18) went back to
+#: _TAIL. Grow this set consciously — every entry displaces an
+#: oracle-checked slot.
+_ROWS_ONLY_WINDOWED: set[str] = set()
 
 
 def test_oracle_queries_fill_the_driver_window_exactly():
@@ -608,7 +601,7 @@ def test_round16_rotation_queries_have_driver_rows():
 #: langid confusion, zipf slope, rolling-7day, hourly OHLC, idle-rich
 #: — to the r18 forced set to make room for its newborns), the three
 #: never-windowed rows-only debuts, the 13 round-17-born operators,
-#: and the 7 session-2-born operators hold window slots.
+#: and the 7 session-2-born operators held window slots in r17 and r18.
 _ROTATED_IN_R17 = [
     "agg_mann_whitney_u",
     "agg_ks_two_sample",
@@ -659,10 +652,79 @@ _ROTATED_IN_R17 = [
 ]
 
 
-def test_round17_rotation_refreshes_the_stale_cohorts():
+def test_round17_rotation_queries_have_driver_rows():
+    """The r17 window earned its driver rows in CORRECTNESS_r17 and
+    rotated out in round 19 (round 18 kept it); pin that each
+    oracle-carrying member (and each rows-only member, rows-recorded)
+    really met the driver."""
+    import json
+    import pathlib
+
+    rows = json.loads(
+        (pathlib.Path(__file__).resolve().parent.parent / "CORRECTNESS_r17.json").read_text()
+    )
+    for n in _ROTATED_IN_R17:
+        r = rows[n]
+        if plans.QUERIES[n].oracle is None:
+            assert r["spark_rows"] is not None and r["spark_rows"] >= 0, n
+        else:
+            assert r["rows_match"] and r["schema_match"] and r["hash_match"], n
+
+
+#: Round-19 rotation contract (the r18 ledger in plans/__init__.py):
+#: the 21 r10-evidence queries the freshness guard forces at r19 and
+#: the first 21 of the 43-query r11-evidence cohort hold window slots
+#: beside the eight standing family witnesses.
+_ROTATED_IN_R19 = [
+    "window_rolling_7day_revenue",
+    "stream_hourly_ohlc",
+    "agg_idle_rich_customers",
+    "llm_bpe_train_merges",
+    "llm_bpe_segment_vocab",
+    "llm_langid_confusion_matrix",
+    "llm_zipf_slope_report",
+    "join_excess_quantity_suppliers",
+    "llm_bpe_encode_stats",
+    "agg_event_type_lift",
+    "llm_ivfpq_topk",
+    "window_ewma_daily_revenue",
+    "llm_curation_pipeline_v2",
+    "window_seasonal_naive_mape",
+    "agg_weekday_seasonality",
+    "llm_curriculum_order",
+    "llm_simhash_hamming_pairs",
+    "agg_rolling_wau",
+    "llm_winnow_collisions",
+    "llm_kmeans_purity",
+    "agg_nation_revenue_yoy",
+    "agg_forecast_revenue_change",
+    "agg_local_supplier_volume",
+    "join_min_cost_supplier",
+    "join_lone_late_supplier",
+    "llm_kcore_candidates",
+    "llm_mattr_lexical_diversity",
+    "llm_reservoir_sample_by_lang",
+    "llm_weighted_sample_docs",
+    "llm_source_kl_divergence",
+    "llm_train_split_leakage_aware",
+    "llm_embedding_covariance",
+    "llm_minhash_lsh_pairs_stored",
+    "llm_ivfpq_encoded_topk",
+    "join_bucketed_priority_revenue",
+    "llm_minhash_lsh_pairs",
+    "llm_neardup_clusters",
+    "llm_embedding_neardup_clusters",
+    "llm_pagerank_candidates",
+    "llm_minhash_estimate_calibration",
+    "llm_incremental_neardup",
+    "llm_sentence_dedup_fraction",
+]
+
+
+def test_round19_rotation_refreshes_the_stale_cohorts():
     window = list(plans.QUERIES)[:_DRIVER_WINDOW]
-    missing = [n for n in _ROTATED_IN_R17 if n not in window]
-    assert missing == [], f"r17 rotation set missing from the window: {missing}"
+    missing = [n for n in _ROTATED_IN_R19 if n not in window]
+    assert missing == [], f"r19 rotation set missing from the window: {missing}"
 
 
 #: Operators registered straight into _OVERFLOW in the round that

@@ -18,6 +18,7 @@ measures allocator contention, not plan scaling.
 Usage:
     python tools/scale_probe.py generate
     python tools/scale_probe.py run q1 q2 ...   # times at sf0.1 AND 10×
+    python tools/scale_probe.py cli N           # CLI pipeline, N contract dirs
 """
 
 from __future__ import annotations
@@ -365,8 +366,74 @@ def simhash_blocks() -> None:
     print(f"verified in-radius pairs emitted: {pairs}")
 
 
+def cli(n_dirs: int) -> None:
+    """The paper's CLI pipeline on an ``n_dirs``-directory contract tree
+    written by the benchmark's generator (``perfbench/contract_tree.py``,
+    seed 0, under ``.scale_probe/cli<N>/``). Each of three rounds runs the
+    documented invocation (BASELINE.md) into a fresh DuckDB file,
+    ``pre-process --chunk-size 100 --ignore-errors`` then
+    ``index-functions --chunk-size 20``, and prints each command's wall
+    and CPU seconds (this process plus the Spark JVM and Python workers
+    below it). Round 1 includes the session's warm-up. The stored row
+    counts are checked against the generator's model every round."""
+    import shutil
+    import tempfile
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    sys.path[:0] = [repo, os.path.join(repo, "perfbench")]
+    import bench
+    import contract_tree
+    import duckdb
+    from workloads import CpuMeter
+
+    from smart_contract_database_builder_spark import cli as scdb_cli
+    from smart_contract_database_builder_spark.session import get_spark
+
+    calib_min_ms, calib_p50_ms = bench._machine_calibration_ms()
+    tree = os.path.join(os.path.dirname(OUT), f"cli{n_dirs}")
+    shutil.rmtree(tree, ignore_errors=True)
+    model = contract_tree.write_tree(tree, n_dirs, seed=0)
+    print(f"tree {tree}: {contract_tree.summary(model)}", flush=True)
+    spark = get_spark(
+        app_name="scale-probe-cli",
+        extra_conf={"spark.ui.enabled": "false",
+                    "spark.ui.showConsoleProgress": "false",
+                    "spark.driver.memory": "2g"},
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    print(f"master {spark.sparkContext.master} calib_ms min "
+          f"{calib_min_ms:.1f} p50 {calib_p50_ms:.1f}", flush=True)
+    steps = (
+        ("pre-process", ["pre-process", "--contracts-root", tree,
+                         "--chunk-size", "100", "--ignore-errors"]),
+        ("index-functions", ["index-functions", "--chunk-size", "20"]),
+    )
+    with tempfile.TemporaryDirectory(prefix="scale_probe_cli_") as work:
+        for r in range(1, 4):
+            db = os.path.join(work, f"round{r}.duckdb")
+            for name, argv in steps:
+                with CpuMeter() as cpu:
+                    t0 = time.perf_counter()
+                    rc = scdb_cli.main(argv + ["--db-file", db])
+                    wall = time.perf_counter() - t0
+                if rc != 0:
+                    raise SystemExit(f"{name} exited {rc}")
+                print(f"round {r} {name} wall {wall:.2f} s cpu "
+                      f"{cpu.seconds:.2f} s", flush=True)
+            con = duckdb.connect(db, read_only=True)
+            got = tuple(con.execute(f"SELECT COUNT(*) FROM {t}").fetchone()[0]
+                        for t in ("contract", "function"))
+            con.close()
+            want = (model.contract_rows, model.function_rows)
+            if got != want:
+                raise SystemExit(f"round {r}: stored {got}, model {want}")
+    spark.stop()
+
+
 if __name__ == "__main__":
-    if sys.argv[1] == "generate_lowdup":
+    if sys.argv[1] == "cli":
+        cli(int(sys.argv[2]))
+    elif sys.argv[1] == "generate_lowdup":
         generate_lowdup()
     elif sys.argv[1] == "generate":
         generate()
